@@ -40,15 +40,24 @@ object CdcMerge {
   /** `epoch` is the SOURCE epoch the caller presented; `effEpoch` the
     * internal epoch the files were actually recorded under (remapped to
     * stay monotone after fresh-checkpoint restarts) — manifest lookups by
-    * epoch must use `effEpoch`, not `epoch`.
+    * epoch must use `effEpoch`, not `epoch`. `manifest` is the manifest
+    * this call committed (the current one when a replay no-oped), so a
+    * caller can inspect the commit without re-reading the table.
     */
   final case class Stats(
       epoch: Long, applied: Boolean, batchRows: Long,
-      affectedBuckets: Int, wallMs: Long, effEpoch: Long = -1L)
+      affectedBuckets: Int, wallMs: Long, effEpoch: Long = -1L,
+      manifest: Option[Manifest] = None)
 
   /** Keep the latest change per key within the batch:
     * `row_number() over (partition by key order by lsn desc) = 1`.
     * Duplicate deliveries of the same (key, lsn) collapse to one row.
+    * The ordering key is (lsn, op), and merge-on-read's `max_by` dedup
+    * orders by the same pair: the synthetic WAL only ever ties on
+    * identical duplicate deliveries, but the SQL MERGE surface accepts
+    * arbitrary sources, so two ops at one (key, lsn) must resolve
+    * identically under MOR and CoW, and identically across replays, or
+    * reconvergence breaks.
     */
   def dedupMaxLsn(batch: DataFrame): DataFrame = {
     val w = Window.partitionBy(KEY_COLS.map(col): _*)
@@ -56,24 +65,6 @@ object CdcMerge {
     batch.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn")
-  }
-
-  /** Same max-LSN-per-key semantics as [[dedupMaxLsn]], but as a hash
-    * aggregation (`max_by(struct(*), struct(lsn, op))`): partial
-    * aggregation combines duplicate keys map-side BEFORE the shuffle, so
-    * the exchange carries only surviving rows — the hot-path choice for
-    * merge-on-read. The ordering key is (lsn, op), matching the window
-    * form's `lsn desc, op desc` tie-break EXACTLY: the synthetic WAL only
-    * ever ties on identical duplicate deliveries, but the SQL MERGE
-    * surface accepts arbitrary sources — two ops at one (key, lsn) must
-    * resolve identically under MOR and CoW, and identically across
-    * replays, or reconvergence breaks.
-    */
-  def dedupMaxLsnAgg(batch: DataFrame): DataFrame = {
-    val all = struct(batch.columns.map(col).toIndexedSeq: _*)
-    batch.groupBy(KEY_COLS.map(col): _*)
-      .agg(max_by(all, struct(col("lsn"), col("op"))).as("__r"))
-      .select(col("__r.*"))
   }
 
   private val trace = sys.env.contains("GRAFT_TRACE")
@@ -102,7 +93,7 @@ object CdcMerge {
     // per-key max-LSN gate).
     val sameStream = m.streamId == streamId
     if (sameStream && m.lastSourceEpoch >= epoch) {
-      return Stats(epoch, applied = false, -1, 0, 0, effEpoch = m.lastEpoch)
+      return Stats(epoch, applied = false, -1, 0, 0, effEpoch = m.lastEpoch, manifest = Some(m))
     }
     if (!sameStream && m.streamId.nonEmpty && epoch <= m.lastEpoch)
       System.err.println(s"[cdc-merge] WARN: stream '$streamId' presented epoch " +
@@ -126,13 +117,9 @@ object CdcMerge {
         (m.schemas :+ SchemaEntry(id, newUser.toDDL), id)
       } else (m.schemas, m.currentSchemaId)
 
-    // ---- dedup + align to physical shape ----
-    val deduped = mode match {
-      case MergeOnRead => dedupMaxLsnAgg(batch) // map-side partial combine
-      case CopyOnWrite => dedupMaxLsn(batch)    // the canonical window form
-    }
     val physTarget = physical(newUser)
-    val asPhysical = LakeTable.alignTo(
+    // the deduped rows (latest change per key) in the physical shape
+    def toPhysical(deduped: DataFrame): DataFrame = LakeTable.alignTo(
       deduped
         .withColumn(LSN_COL, col("lsn"))
         .withColumn(DELETED_COL, col("op") === "D"),
@@ -150,40 +137,62 @@ object CdcMerge {
 
     val (newFiles, carried, affected) = mode match {
       case MergeOnRead =>
-        // O(batch): write deduped rows as per-bucket DELTA files.
-        // ADAPTIVE salting: one writer task per bucket keeps file count at
-        // ~1 file/bucket/batch, but a bucket holding a hot conversation
-        // (Zipf head) would straggle — so buckets whose PREVIOUS batch
-        // share exceeded 2x fair share are split across `saltBuckets`
-        // tasks on hash(turn_idx). Detection is free: per-bucket row
-        // counts of the last delta epoch live in the manifest (one-batch
-        // lag is fine for steady streams, and avoids a counting job +
-        // full-batch persist).
+        // O(batch): write deduped rows as per-bucket DELTA files, planned
+        // with ONE exchange. Each raw row gets its writer slot
+        // `bucket + numBuckets * salt`, the batch is hashed once on the
+        // slot into `spark.sql.shuffle.partitions` writer tasks (set by
+        // the Spark config, not by the bucket count), and the max-LSN dedup
+        // runs AFTER that shuffle: grouping by (slot, key) is grouping by
+        // key (the slot is a function of the key), and the slot's hash
+        // partitioning already satisfies the aggregate's distribution, so
+        // its partial and final halves both run in the writer stage. The
+        // slot must reference the bucket: a bare literal salt would be
+        // folded away and the aggregate would plan a second exchange on
+        // the key.
+        // No map-side combine before the shuffle: on the cdc_tail
+        // benchmark (5,000-event batches, 4 cores) dedup keeps 0.76 of the
+        // rows, too few duplicates for a combine to pay; the one exchange
+        // writes 360 KB per batch, against 639 KB for the combine on the
+        // key plus the re-shuffle on the bucket that it replaced.
+        // ADAPTIVE salting: a cold bucket has one slot, so it lands in one
+        // writer task and one file per batch; a bucket holding a hot
+        // conversation (Zipf head) would straggle, so buckets whose
+        // PREVIOUS batch share exceeded 2x fair share get `saltBuckets`
+        // slots on hash(turn_idx) and split across writers. Detection is
+        // free: per-bucket row counts of the last delta epoch live in the
+        // manifest (one-batch lag is fine for steady streams, and avoids a
+        // counting job + full-batch persist).
         val lastDeltas = m.files.filter(f =>
           f.kind == FileEntry.DELTA && f.epoch == m.lastEpoch)
         val counts = lastDeltas.groupBy(_.bucket).view.mapValues(_.map(_.rows).sum).toMap
         val fair = math.max(1L, counts.values.sum / math.max(1, m.numBuckets))
         val hot = counts.filter(_._2 > 2 * fair).keys.toSeq
-        val saltExpr =
+        val bucket = table.bucketExpr(m.numBuckets)
+        val salt =
           if (hot.isEmpty || saltBuckets <= 1) lit(0L)
-          else when(col("bucket").isin(hot: _*),
+          else when(bucket.isin(hot: _*),
             pmod(xxhash64(col("turn_idx")), lit(saltBuckets.toLong))).otherwise(lit(0L))
-        val nParts = math.max(spark.sessionState.conf.numShufflePartitions,
-          math.min(m.numBuckets + hot.size * (saltBuckets - 1), 4096))
+        val latest = max_by(struct(batch.columns.map(col).toIndexedSeq: _*),
+          struct(col("lsn"), col("op")))
+        val deduped = batch
+          .withColumn("__slot", bucket + lit(m.numBuckets.toLong) * salt)
+          .repartition(spark.sessionState.conf.numShufflePartitions, col("__slot"))
+          .groupBy((col("__slot") +: KEY_COLS.map(col)): _*)
+          .agg(latest.as("__r"))
+          .select(col("__r.*"))
         // sort within writer tasks: tight per-file (conv_id) ranges for
         // file-level pruning + better parquet encoding
-        val salted = asPhysical
-          .withColumn("bucket", table.bucketExpr(m.numBuckets))
-          .repartition(nParts, col("bucket"), saltExpr)
+        val sorted = toPhysical(deduped)
+          .withColumn("bucket", bucket)
           .sortWithinPartitions("bucket", "conv_id", "turn_idx")
         traced("delta-write")(
-          salted.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString))
+          sorted.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString))
         val files = traced("adopt-staged")(
           adoptStaged(table, spark, staging, effEpoch, schemaId2, FileEntry.DELTA, physTarget))
         (files, m.files, files.map(_.bucket).toSet)
 
       case CopyOnWrite =>
-        val bucketed = asPhysical
+        val bucketed = toPhysical(dedupMaxLsn(batch))
           .withColumn("bucket", table.bucketExpr(m.numBuckets))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val aff0 = bucketed.select("bucket").distinct().collect().map(_.getInt(0)).toSet
@@ -290,7 +299,8 @@ object CdcMerge {
           System.currentTimeMillis())).takeRight(1000))
       try {
         table.commit(m2, base.version)
-        return Stats(epoch, applied = true, newFiles.map(_.rows).sum, affected.size, wallMs, effEpoch)
+        return Stats(epoch, applied = true, newFiles.map(_.rows).sum, affected.size, wallMs,
+          effEpoch, Some(m2))
       } catch {
         // CAS lost → re-enter the loop; carriedNow then rebases (MOR) or
         // raises the explicit single-committer error (CoW)
@@ -511,7 +521,11 @@ object Compactor {
 
   /** Buckets whose deltas span >= `deltaThreshold` distinct epochs. */
   def dueBuckets(table: LakeTable, deltaThreshold: Int): Seq[Int] =
-    table.manifest.files.groupBy(_.bucket).collect {
+    dueBuckets(table.manifest, deltaThreshold)
+
+  /** [[dueBuckets]] of an already-read manifest. */
+  def dueBuckets(m: Manifest, deltaThreshold: Int): Seq[Int] =
+    m.files.groupBy(_.bucket).collect {
       case (b, fs) if fs.filter(_.kind == FileEntry.DELTA)
         .map(_.epoch).distinct.size >= deltaThreshold => b
     }.toSeq.sorted

@@ -61,13 +61,28 @@ object CdcStream {
   private val maintenancePool = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
     val t = new Thread(r, "graft-compaction"); t.setDaemon(true); t
   })
-  // busy flag is PER TABLE: one table's slow rewrite must not suppress
-  // another table's compaction ticks in the same JVM
-  private val maintenanceBusy =
-    scala.collection.concurrent.TrieMap.empty[String, java.util.concurrent.atomic.AtomicBoolean]
-  private def busyFlag(table: LakeTable) =
-    maintenanceBusy.getOrElseUpdate(table.root.toAbsolutePath.normalize.toString,
-      new java.util.concurrent.atomic.AtomicBoolean(false))
+
+  /** A stream fails after this many async compactions in a row failed. */
+  private val MaxCompactionFailures = 3
+
+  /** Async-compaction state of one table: whether a rewrite is in flight,
+    * and how many rewrites failed in a row (with the last cause).
+    */
+  private final class Maintenance {
+    val busy = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var lastFailure: Throwable = null
+  }
+  // state is PER TABLE: one table's slow or failing rewrite must not
+  // suppress or fail another table's compaction in the same JVM
+  private val maintenance = scala.collection.concurrent.TrieMap.empty[String, Maintenance]
+  private def maintenanceOf(table: LakeTable) =
+    maintenance.getOrElseUpdate(table.root.toAbsolutePath.normalize.toString, new Maintenance)
+
+  /** Async compactions of `table` that failed since its last successful
+    * one (or since the stream last raised them).
+    */
+  def compactionFailures(table: LakeTable): Int = maintenanceOf(table).failures.get
 
   // tables already warned about the bucket-space cap (warn once, not per batch)
   private val capWarned =
@@ -115,20 +130,32 @@ object CdcStream {
     * the per-partition lineage feed — one implementation under both the
     * parquet WAL tail and the JSON envelope tail.
     */
-  private def applyAndMaintain(table: LakeTable, df: DataFrame, epoch: Long,
-                               saltBuckets: Int, mode: CdcMerge.Mode,
-                               compactEvery: Int, asyncCompaction: Boolean,
-                               checkpointDir: String,
-                               maxRowsPerBucket: Long = 0L): Unit = {
+  private[graft] def applyAndMaintain(table: LakeTable, df: DataFrame, epoch: Long,
+                                      saltBuckets: Int, mode: CdcMerge.Mode,
+                                      compactEvery: Int, asyncCompaction: Boolean,
+                                      checkpointDir: String,
+                                      maxRowsPerBucket: Long = 0L): Unit = {
+        // a maintenance thread that keeps failing must stop the stream, not
+        // just print: without compaction the delta depth, and with it every
+        // read, grows without bound. The count is cleared as it is raised,
+        // so a restarted stream gets a fresh budget.
+        val maint = maintenanceOf(table)
+        if (maint.failures.get >= MaxCompactionFailures) {
+          val n = maint.failures.getAndSet(0)
+          throw new IllegalStateException(
+            s"async compaction of ${table.root} failed $n times in a row", maint.lastFailure)
+        }
         val stats = CdcMerge.apply(table, df, epoch, saltBuckets, mode,
           streamId = streamIdOf(checkpointDir))
+        // the manifest this batch committed: the compaction policy and the
+        // lineage line below read it instead of re-reading the table
+        val m = stats.manifest.getOrElse(table.manifest)
         // AUTO-REBUCKET: when average bucket occupancy outgrows the bound,
         // double the bucket space (metadata-only commit; old files migrate
         // lazily through ordinary compaction). Runs BETWEEN merges on the
         // stream thread, so it never races this stream's own commits; a
         // concurrent async compactor rebases over it (depth stamping).
         if (maxRowsPerBucket > 0L) {
-          val m = table.manifest
           if (m.totalRows / math.max(1, m.numBuckets) > maxRowsPerBucket) {
             // never crash the stream on the bucket-space cap: ingestion
             // must keep flowing when the table can't grow further (warn
@@ -144,18 +171,24 @@ object CdcStream {
             }
           }
         }
+        // a rebucket keeps every file's bucket number, so the due set read
+        // off the committed manifest is the one the rebucketed table has
         if (mode == CdcMerge.MergeOnRead && compactEvery > 0) {
-          if (!asyncCompaction) Compactor.compactIfNeeded(table, compactEvery)
-          else {
-            val busy = busyFlag(table)
-            if (busy.compareAndSet(false, true)) {
+          val due = Compactor.dueBuckets(m, compactEvery)
+          if (due.nonEmpty) {
+            if (!asyncCompaction) Compactor.compact(table, due.toSet)
+            else if (maint.busy.compareAndSet(false, true)) {
               maintenancePool.submit(new Runnable {
                 def run(): Unit = try {
-                  val due = Compactor.dueBuckets(table, compactEvery)
-                  if (due.nonEmpty) Compactor.compactConcurrent(table, due.toSet)
+                  Compactor.compactConcurrent(table, due.toSet)
+                  maint.failures.set(0)
                 } catch {
-                  case e: Throwable => System.err.println(s"[cdc-stream] async compaction failed: $e")
-                } finally busy.set(false)
+                  case e: Throwable =>
+                    maint.lastFailure = e
+                    val n = maint.failures.incrementAndGet()
+                    System.err.println(s"[cdc-stream] async compaction of ${table.root} " +
+                      s"failed ($n in a row): $e")
+                } finally maint.busy.set(false)
               })
             }
           }
@@ -164,7 +197,6 @@ object CdcStream {
         // streaming loop): which buckets this epoch touched, with rows +
         // max LSN per file, appended as JSON lines next to the checkpoint
         if (stats.applied) {
-          val m = table.manifest
           // files are recorded under the REMAPPED internal epoch (monotone
           // across fresh-checkpoint restarts), not the source epoch —
           // filtering on the source epoch attributed each batch's

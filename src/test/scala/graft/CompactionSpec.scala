@@ -197,4 +197,40 @@ class CompactionSpec extends SparkSpec {
       assert(dupKeys == 0)
     } finally rmrf(dir)
   }
+
+  test("async compaction failures are counted, reset by a success, and fail the stream at 3") {
+    val dir = tmpDir("cc4")
+    val cfg = WalGen.Config(numEvents = 4000, numConvs = 40)
+    try {
+      val table = LakeTable.create(spark, s"$dir/t", Schemas.transcript, numBuckets = 2)
+      // the stream's per-batch body, called directly so every compaction
+      // has finished before the next batch: compactEvery = 1 makes every
+      // bucket with a delta due after each batch
+      def batch(b: Int): Unit = CdcStream.applyAndMaintain(table,
+        WalGen.events(spark, cfg, b * 400L, b * 400L + 400L).toDF(), b.toLong,
+        saltBuckets = 8, mode = CdcMerge.MergeOnRead, compactEvery = 1,
+        asyncCompaction = true, checkpointDir = s"$dir/cp")
+      def step(b: Int): Int = { batch(b); CdcStream.awaitMaintenance(); CdcStream.compactionFailures(table) }
+      // a missing base file fails every rewrite that reads its bucket, while
+      // merge-on-read appends (which read no data files) keep committing
+      val aside = java.nio.file.Paths.get(s"$dir/aside.parquet")
+      def hideABase(): java.nio.file.Path = {
+        val f = table.root.resolve(table.manifest.files.find(_.kind == FileEntry.BASE).get.path)
+        java.nio.file.Files.move(f, aside); f
+      }
+      assert(step(0) == 0)
+      val hidden = hideABase()
+      assert(step(1) == 1)
+      assert(step(2) == 2)
+      java.nio.file.Files.move(aside, hidden)
+      assert(step(3) == 0, "a successful compaction resets the count")
+      hideABase()
+      assert((4 to 6).map(step) == Seq(1, 2, 3))
+      val e = intercept[IllegalStateException](batch(7))
+      assert(e.getMessage.contains("failed 3 times in a row"), e.getMessage)
+      assert(e.getCause != null, "the last compaction failure is the cause")
+      assert(table.manifest.lastSourceEpoch == 6, "the failing batch must not commit")
+      assert(CdcStream.compactionFailures(table) == 0, "raising clears the count")
+    } finally rmrf(dir)
+  }
 }

@@ -6,7 +6,7 @@ import graft.merge.CdcMerge
 /** Physical-plan-shape assertions for the headline paths — the plans must
   * stay the ones you'd want at 100 TB, not just produce correct rows:
   * filters reach the parquet scan, projections prune the read schema,
-  * small joins broadcast, and the merge-on-read dedup combines map-side.
+  * small joins broadcast, and the merge-on-read apply shuffles once.
   */
 class PlanShapeSpec extends SparkSpec {
 
@@ -35,20 +35,54 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("SortMergeJoin"), "small-dim join must not sort-merge")
   }
 
-  test("merge-on-read dedup aggregates map-side before the exchange") {
-    import spark.implicits._
-    val batch = (0 until 1000).map(i =>
-      ("c" + (i % 50), i % 20, "U", i.toLong, "role", "text", "tool",
-        new java.sql.Timestamp(i.toLong)))
-      .toDF("conv_id", "turn_idx", "op", "lsn", "role", "text", "tool", "ts")
-      .repartition(4)
-    val deduped = CdcMerge.dedupMaxLsnAgg(batch)
-    deduped.collect()
-    val plan = deduped.queryExecution.executedPlan.toString
-    // partial max_by before the shuffle, final after — map-side combine
-    assert("HashAggregate.*partial_max_by".r.findFirstIn(plan).isDefined ||
-      plan.contains("partial_max_by"), plan.take(3000))
-    assert(plan.contains("Exchange hashpartitioning(conv_id"), plan.take(3000))
+  test("merge-on-read apply plans one exchange with a salted bucket") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = tmpDir("planshape-mor")
+    val ts = new java.sql.Timestamp(1700000000000L)
+    // one conversation takes ~60% of the events, so batch 0's delta stats
+    // flag its bucket hot and batch 1 salts it across writers
+    def batchDf(lsnBase: Long) = spark.range(4000).select(
+      lit("U").as("op"), (col("id") + lsnBase).as("lsn"),
+      when(col("id") % 10 < 6, "conv-hot")
+        .otherwise(concat(lit("conv"), pmod(col("id"), lit(50)))).as("conv_id"),
+      pmod(col("id") * 7919, lit(100000)).cast("int").as("turn_idx"),
+      lit("user").as("role"), lit("x").as("text"),
+      lit(null).cast("string").as("tool"), lit(ts).as("ts"))
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case e: ShuffleExchangeExec => e +: e.children.flatMap(shuffles)
+      case other => other.children.flatMap(shuffles)
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    durationNs: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    try {
+      val t = graft.lake.LakeTable.create(spark, s"$dir/t",
+        graft.model.Schemas.transcript, numBuckets = 4)
+      CdcMerge.apply(t, batchDf(0), 0L, saltBuckets = 4)
+      spark.listenerManager.register(listener)
+      try {
+        CdcMerge.apply(t, batchDf(1000000), 1L, saltBuckets = 4)
+        val deadline = System.currentTimeMillis() + 30000
+        while (plans.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      } finally spark.listenerManager.unregister(listener)
+      assert(t.manifest.files.filter(_.epoch == 1).groupBy(_.bucket).values.exists(_.size > 1),
+        "batch 1 should salt the hot bucket")
+      assert(plans.size == 1, s"expected one write execution, got ${plans.size}")
+      val plan = plans.peek()
+      val ex = shuffles(plan)
+      assert(ex.size == 1, s"expected exactly one shuffle, got ${ex.size}:\n$plan")
+      // the dedup aggregates (partial and final) run after that one shuffle
+      assert(plan.toString.contains("max_by"), plan.toString.take(3000))
+      assert(!ex.head.toString.contains("max_by"), s"dedup runs before the shuffle:\n$plan")
+    } finally rmrf(dir)
   }
 
   test("snapshot of an all-BASE table has no shuffle at all") {
